@@ -54,8 +54,14 @@ def mismatch(got, want) -> str | None:
     return f"rows {got[0]} vs {want[0]}, cols {got[1] != want[1]}, hash {got[2]} vs {want[2]}"
 
 
-def duck_over(lake: str, tables: list[str]) -> duckdb.DuckDBPyConnection:
+def _connect() -> duckdb.DuckDBPyConnection:
     con = duckdb.connect()
+    con.execute("SET enable_progress_bar = false")  # keep stdout parseable
+    return con
+
+
+def duck_over(lake: str, tables: list[str]) -> duckdb.DuckDBPyConnection:
+    con = _connect()
     for t in tables:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{lake}/{t}.parquet')"
@@ -81,7 +87,7 @@ def check_dag(result, manifest: dict, out_dir: str, sql_marts: dict) -> list[str
     for k in ("formatted_rows", "weather_rows", "combined_rows"):
         if getattr(result, k) != manifest[k]:
             errs.append(f"{k} {getattr(result, k)} != generated {manifest[k]}")
-    con = duckdb.connect()
+    con = _connect()
     con.execute(
         "CREATE VIEW races AS SELECT * FROM "
         f"read_parquet('{out_dir}/combined/*.parquet')"

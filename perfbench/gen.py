@@ -14,9 +14,8 @@ a half-written cache entry behind.
 - :func:`tpch_lake` — the ``mart_serving`` input: the TPC-H-ish tables the
   F1 model (``plans.f1_model``) is derived from, drawn with the same
   marginals as the shipped test lake (uniform keys, flags and dates).
-- :func:`corpus_lake` — the ``curate_ingest`` input: ``documents`` over the
-  test lake's 31-word vocabulary with injected exact and near duplicates,
-  and unit-norm 64-dim ``embeddings`` sharing the document id domain.
+- :func:`corpus_lake` — the ``curate_ingest`` input: ``documents`` and
+  ``embeddings`` shaped like the shipped test tables.
 """
 
 from __future__ import annotations
@@ -294,27 +293,20 @@ LANG_P = [0.41, 0.15, 0.15, 0.15, 0.14]
 EMBED_DIM = 64
 
 
-def _build_corpus_lake(out: str, seed: int, n_docs: int) -> dict:
-    """``documents`` (ids 0..n-1, 10-100 words) where ~4% are exact copies
-    and ~6% near copies (3 words replaced) of an earlier document, so every
-    curation gate has work in both halves; one embedding per document, so
-    update batches also feed the SemDeDup index, with ~5% of vectors a
-    small perturbation of an earlier one (semantic duplicates)."""
+def _build_corpus_lake(out: str, seed: int, n_docs: int, vec_per_doc: float) -> dict:
+    """``documents`` and ``embeddings`` with the shape of the shipped test
+    tables (``tools/gen_scaledata.py`` records the measurements): every text
+    freshly sampled — 10-100 words drawn uniformly from the 31-word
+    vocabulary, so near duplicates arise only by chance, as there — and
+    unit-norm 64-dim gaussian vectors with no structure, ``vec_per_doc``
+    per document on the lowest ids of the shared id domain.  The shipped
+    sf0.001 and sf0.01 tables have one vector per document (500 / 500),
+    sf0.1 has 0.4 (2,000 / 5,000)."""
     rng = np.random.default_rng([seed, 3])
-    words = []
-    for i in range(n_docs):
-        r = rng.random()
-        if i > 10 and r < 0.04:
-            words.append(list(words[int(rng.integers(0, i))]))
-        elif i > 10 and r < 0.10:
-            w = list(words[int(rng.integers(0, i))])
-            for j in rng.integers(0, len(w), 3):
-                w[j] = VOCAB[int(rng.integers(0, len(VOCAB)))]
-            words.append(w)
-        else:
-            idx = rng.integers(0, len(VOCAB), int(rng.integers(10, 101)))
-            words.append([VOCAB[k] for k in idx])
-    texts = [" ".join(w) for w in words]
+    texts = [
+        " ".join(VOCAB[k] for k in rng.integers(0, len(VOCAB), int(rng.integers(10, 101))))
+        for _ in range(n_docs)
+    ]
     langs = rng.choice(len(LANGS), size=n_docs, p=LANG_P)
     pq.write_table(pa.table({
         "doc_id": pa.array(range(n_docs), pa.int64()),
@@ -323,11 +315,8 @@ def _build_corpus_lake(out: str, seed: int, n_docs: int) -> dict:
         "source": [f"src{i % 20}" for i in range(n_docs)],
         "n_chars": pa.array([len(t) for t in texts], pa.int64()),
     }), f"{out}/documents.parquet")
-    n_vec = n_docs
+    n_vec = round(vec_per_doc * n_docs)
     v = rng.standard_normal((n_vec, EMBED_DIM))
-    for i in range(10, n_vec):
-        if rng.random() < 0.05:
-            v[i] = v[int(rng.integers(0, i))] + 0.01 * rng.standard_normal(EMBED_DIM)
     v = (v / np.linalg.norm(v, axis=1, keepdims=True)).astype(np.float32)
     pq.write_table(pa.table({
         "vec_id": pa.array(range(n_vec), pa.int64()),
@@ -378,4 +367,4 @@ def tpch_lake(seed: int, sf: float):
 
 
 def corpus_lake(seed: int, docs: int):
-    return cached("corpus", seed, n_docs=docs)
+    return cached("corpus", seed, n_docs=docs, vec_per_doc=1.0)

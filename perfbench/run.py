@@ -130,18 +130,6 @@ def _rss_mb(pids) -> float:
     return total / 1024
 
 
-def _live_mb(spark) -> float:
-    """Memory the workload holds: the JVM heap still live after a full
-    collection (cached frames, UI store, broadcast state) plus the driver
-    Python process's peak RSS.  Unlike the JVM's RSS, which grows with
-    the collector's timing, this repeats closely from run to run."""
-    jvm = spark.sparkContext._jvm
-    rt = jvm.java.lang.Runtime.getRuntime()
-    jvm.java.lang.System.gc()
-    heap = rt.totalMemory() - rt.freeMemory()
-    return heap / 2**20 + _rss_mb([os.getpid()])
-
-
 def _stop(spark) -> None:
     """Stop the session and the JVM gateway, and wait for the JVM."""
     from pyspark import SparkContext
@@ -194,7 +182,7 @@ def _measure(w, spark, tracer, seconds: float, trace: bool) -> dict:
     out = {"lat": lat, "items": items, "errors": errors, "extra": None,
            "jobs_per_op": jobs / max(len(lat), 1),
            "attempted": len(lat) + bool(errors), "failed": len(errors),
-           "live_mb": _live_mb(spark), "overhead_pct": 0.0}
+           "overhead_pct": 0.0}
     if lat_traced and lat_plain:
         out["overhead_pct"] = 100 * (
             statistics.median(lat_traced) / statistics.median(lat_plain) - 1
@@ -205,8 +193,9 @@ def _measure(w, spark, tracer, seconds: float, trace: bool) -> dict:
         out["extra"] = w.finish()
         out["attempted"], out["failed"], errs = w.check()
         errors += errs
+        tracer.resolve()
     except Exception as e:  # noqa: BLE001 — reported as an incorrect run
-        errors.append(f"finish/check: {type(e).__name__}: {e}"[:500])
+        errors.append(f"finish/check/trace: {type(e).__name__}: {e}"[:500])
         out["failed"] = out["attempted"]
     _log("checks done")
     return out
@@ -255,7 +244,6 @@ def run(workload: str, seed: int, seconds: float, trace: bool, small: bool) -> i
         "setup_s": (setup_s, "s"),
         "fail_ratio": (r["failed"] / max(r["attempted"], 1), "ratio"),
         "peak_rss_mb": (rss, "MB"),
-        "live_mem_mb": (r["live_mb"], "MB"),
         "jobs_per_op": (r["jobs_per_op"], "count"),
         **(w.report(lat, r["items"], r["extra"]) if r["extra"] is not None else {}),
     }

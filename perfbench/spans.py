@@ -24,7 +24,10 @@ Per span call the fields are:
   (1.0 = jobs ran back to back, 0 = no jobs).
 
 A metric is the median over the span's calls in one run.  Spans nest: a
-parent's figures include its children's work.
+parent's figures include its children's work.  While the workload runs, a
+span only notes its job-ID range and its start and end; :meth:`Tracer.resolve`
+reads the UI once the workload is done, so no tracer I/O falls inside any
+span (and none inside a parent span's ``driver_s``).
 """
 
 from __future__ import annotations
@@ -83,6 +86,7 @@ class Tracer:
             lambda: defaultdict(list)
         )
         self.sc = None
+        self._pending: list = []  # spans and callbacks resolve() settles
 
     def bind(self, spark) -> None:
         self.sc = spark.sparkContext
@@ -94,9 +98,6 @@ class Tracer:
     def _get(self, path: str):
         with urllib.request.urlopen(self._api + path, timeout=60) as r:
             return json.load(r)
-
-    def _drain(self) -> None:
-        self.sc._jsc.sc().listenerBus().waitUntilEmpty()
 
     # -- recording -----------------------------------------------------
     def record(self, name: str, field: str, value: float) -> None:
@@ -112,64 +113,37 @@ class Tracer:
         t0 = time.time()
         yield
         t1 = time.time()
-        last = next_job_id(self.sc)
-        for k, v in self._stats(name, first, last, t0, t1).items():
-            if k in fields:
-                self.record(name, k, v)
+        self._pending.append((name, fields, first, next_job_id(self.sc), t0, t1))
 
-    def _stats(self, name, first, last, t0, t1) -> dict[str, float]:
-        out = dict.fromkeys(FIELDS, 0.0)
-        out["wall_s"] = out["driver_s"] = t1 - t0
-        if last == first:
-            return out
-        self._drain()
-        want = set(range(first, last))
-        jobs = [j for j in self._get("/jobs") if j["jobId"] in want]
-        if len(jobs) != len(want):
-            missing = sorted(want - {j["jobId"] for j in jobs})
-            raise EvictedError(
-                f"span {name}: jobs {missing[:5]} no longer in the UI store; "
-                "raise spark.ui.retainedJobs"
-            )
-        stage_ids = {s for j in jobs for s in j["stageIds"]}
-        stages = [s for s in self._get("/stages") if s["stageId"] in stage_ids]
-        if stage_ids - {s["stageId"] for s in stages}:
-            raise EvictedError(
-                f"span {name}: stages of jobs {first}..{last - 1} no longer "
-                "in the UI store; raise spark.ui.retainedStages"
-            )
-        ran = [s for s in stages if s["status"] != "SKIPPED"]
-        spans = []
-        for j in jobs:
-            a = _epoch(j.get("submissionTime")) or t0
-            b = _epoch(j.get("completionTime")) or t1
-            spans.append((max(a, t0), min(max(b, a), t1)))
-        busy = _union(spans)
-        out.update(
-            jobs=len(jobs),
-            stages=sum(len(j["stageIds"]) for j in jobs),
-            stages_skipped=sum(j["numSkippedStages"] for j in jobs),
-            tasks=sum(
-                s["numCompleteTasks"] + s["numFailedTasks"] + s["numKilledTasks"]
-                for s in ran
-            ),
-            exec_run_s=sum(s["executorRunTime"] for s in ran) / 1e3,
-            shuffle_mb=sum(s["shuffleWriteBytes"] for s in ran) / 1e6,
-            spill_mb=sum(s["diskBytesSpilled"] for s in ran) / 1e6,
-            driver_s=max(0.0, (t1 - t0) - busy),
-            job_overlap=(sum(b - a for a, b in spans) / busy) if busy else 0.0,
-        )
-        return out
+    def resolve(self) -> None:
+        """Turn every span noted so far into samples: wait for the
+        listener bus to drain, read all jobs and stages from the UI once,
+        and run the deferred ``after`` callbacks of :meth:`wrap`.  Call it
+        after the workload's last span and before the session stops."""
+        pending, self._pending = self._pending, []
+        jobs = stages = None
+        if any(p[2] != p[3] for p in pending if isinstance(p, tuple)):
+            self.sc._jsc.sc().listenerBus().waitUntilEmpty()
+            jobs = {j["jobId"]: j for j in self._get("/jobs")}
+            stages = {s["stageId"]: s for s in self._get("/stages")}
+        for p in pending:
+            if callable(p):
+                p()
+                continue
+            name, fields, first, last, t0, t1 = p
+            for k, v in _stats(name, first, last, t0, t1, jobs, stages).items():
+                if k in fields:
+                    self.samples[name][k].append(v)
 
     def wrap(self, fn, name: str, after=None):
         """``fn`` wrapped in a span; ``after(args, result)`` may record
-        extra fields of the same span once the call returned."""
+        extra fields of the same span, and runs in :meth:`resolve`."""
 
         def wrapped(*args, **kwargs):
             with self.span(name):
                 result = fn(*args, **kwargs)
             if after is not None and self.active:
-                after(args, result)
+                self._pending.append(lambda: after(args, result))
             return result
 
         return wrapped
@@ -180,3 +154,47 @@ class Tracer:
             for span, by_field in self.samples.items()
             for field, vals in by_field.items()
         }
+
+
+def _stats(name, first, last, t0, t1, all_jobs, all_stages) -> dict[str, float]:
+    """A span's fields from its job-ID range ``[first, last)`` and the
+    UI's job and stage records."""
+    out = dict.fromkeys(FIELDS, 0.0)
+    out["wall_s"] = out["driver_s"] = t1 - t0
+    if last == first:
+        return out
+    missing = [i for i in range(first, last) if i not in all_jobs]
+    if missing:
+        raise EvictedError(
+            f"span {name}: jobs {missing[:5]} no longer in the UI store; "
+            "raise spark.ui.retainedJobs"
+        )
+    jobs = [all_jobs[i] for i in range(first, last)]
+    stage_ids = {s for j in jobs for s in j["stageIds"]}
+    if stage_ids - set(all_stages):
+        raise EvictedError(
+            f"span {name}: stages of jobs {first}..{last - 1} no longer "
+            "in the UI store; raise spark.ui.retainedStages"
+        )
+    ran = [all_stages[s] for s in stage_ids if all_stages[s]["status"] != "SKIPPED"]
+    spans = []
+    for j in jobs:
+        a = _epoch(j.get("submissionTime")) or t0
+        b = _epoch(j.get("completionTime")) or t1
+        spans.append((max(a, t0), min(max(b, a), t1)))
+    busy = _union(spans)
+    out.update(
+        jobs=len(jobs),
+        stages=sum(len(j["stageIds"]) for j in jobs),
+        stages_skipped=sum(j["numSkippedStages"] for j in jobs),
+        tasks=sum(
+            s["numCompleteTasks"] + s["numFailedTasks"] + s["numKilledTasks"]
+            for s in ran
+        ),
+        exec_run_s=sum(s["executorRunTime"] for s in ran) / 1e3,
+        shuffle_mb=sum(s["shuffleWriteBytes"] for s in ran) / 1e6,
+        spill_mb=sum(s["diskBytesSpilled"] for s in ran) / 1e6,
+        driver_s=max(0.0, (t1 - t0) - busy),
+        job_overlap=(sum(b - a for a, b in spans) / busy) if busy else 0.0,
+    )
+    return out

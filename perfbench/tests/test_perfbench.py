@@ -1,9 +1,10 @@
-"""The benchmark's own tests: generator determinism, metric naming, and a
-small-input smoke run of every workload, untraced and traced, with the
-correctness checks on.
+"""The benchmark's own tests: generator determinism and shape, metric
+naming, a small-input smoke run of every workload, untraced and traced,
+with the correctness checks on, and expected failures that reproduce two
+package defects.
 
 Run from the repository root:  python3 -m pytest perfbench/tests -q
-(about six minutes on 4 cores: six small runs, each starting a JVM).
+(about six minutes on 4 cores: eight small runs, each starting a JVM).
 """
 
 from __future__ import annotations
@@ -42,7 +43,7 @@ def _same_tree(a: str, b: str) -> bool:
 @pytest.mark.parametrize("kind,params", [
     ("raw", {"seasons": 2, "rounds": 6, "n_drivers": 8}),
     ("tpch", {"sf": 0.001}),
-    ("corpus", {"n_docs": 60}),
+    ("corpus", {"n_docs": 40, "vec_per_doc": 1.0}),
 ])
 def test_generator_is_deterministic(tmp_path, kind, params):
     a, b, c = (str(tmp_path / x) for x in "abc")
@@ -76,6 +77,21 @@ def test_raw_lake_carries_the_fixture_edge_cases(tmp_path):
         assert city not in cities
         assert os.path.getsize(f"{out}/METEO2_data_{city}.csv") > 0
     assert info["combined_rows"] < info["formatted_rows"]
+
+
+def test_corpus_has_the_shipped_shape(tmp_path):
+    import pyarrow.parquet as pq
+
+    out = str(tmp_path / "corpus")
+    info = gen.build("corpus", out, 3, n_docs=50, vec_per_doc=0.4)
+    docs = pq.read_table(f"{out}/documents.parquet").to_pandas()
+    vecs = pq.read_table(f"{out}/embeddings.parquet").to_pandas()
+    words = docs.text.str.split()
+    assert words.str.len().between(10, 100).all()
+    assert set(words.explode()) <= set(gen.VOCAB)
+    assert docs.text.nunique() == len(docs)  # fresh samples, no copies
+    assert info["embeddings_rows"] == len(vecs) == 20
+    assert list(vecs.vec_id) == list(range(20))
 
 
 def test_metric_names_and_benchmark_json_agree():
@@ -133,15 +149,16 @@ REACHES = {
                       "operators.curate_index.curate_index_update.job_overlap",
                       "operators.curate_index.curate_resolve.stages",
                       "functions.snapshots.commits",
-                      "functions.snapshots.files_written"),
+                      "functions.snapshots.files_written",
+                      "pipeline.run.jobs", "sources.sinks.write_parquet.files",
+                      "sources.sinks.write_mart.output_mb"),
 }
 ZERO = {
     "f1_dag": ("functions.snapshots.", "operators.curate_index.",
                "operators.marts.", "plans.f1_model."),
     "mart_serving": ("functions.snapshots.", "sources.sinks.",
                      "operators.curate_index.", "pipeline.run."),
-    "curate_ingest": ("sources.sinks.", "operators.marts.", "pipeline.run.",
-                      "plans.f1_model."),
+    "curate_ingest": ("operators.marts.", "plans.f1_model."),
 }
 
 
@@ -193,3 +210,34 @@ def test_space_in_city_name_joins(tmp_path):
     )
     assert p.returncode == 0, p.stderr[-2000:]
     assert p.stdout.strip().splitlines()[-1] == "['Mexico City']"
+
+
+FEWER_VECTORS = """
+import os, sys
+sys.path[:0] = [os.getcwd(), os.path.join(os.getcwd(), "perfbench")]
+import checks, gen, __spark_entry__
+from engineering_school_bigdata_project_f1_weather_spark import get_spark
+from engineering_school_bigdata_project_f1_weather_spark.operators import curate_index
+lake = sys.argv[1]
+gen.build("corpus", lake, 778, n_docs=90, vec_per_doc=0.4)
+spark = get_spark("fewer-vectors", cpus=2)
+got = checks.digest(curate_index.curate_incremental(spark, lake).toPandas())
+spark.stop()
+con = checks.duck_over(lake, checks.CORPUS_TABLES)
+want = checks.digest(con.execute(__spark_entry__.oracle_sql()["curate_incremental"]).df())
+print(checks.mismatch(got, want))
+"""
+
+
+@pytest.mark.xfail(strict=True, reason="curate_incremental bootstraps SemDeDup "
+                   "on vec_id <= max(doc_id)/2, its oracle on vec_id <= "
+                   "max(vec_id)/2: with fewer vectors than documents (0.4 per "
+                   "document, as the shipped sf0.1 tables) the ledgers differ")
+def test_curate_ledger_with_fewer_vectors_than_documents(tmp_path):
+    p = subprocess.run(
+        [sys.executable, "-c", FEWER_VECTORS, str(tmp_path)], cwd=ROOT,
+        capture_output=True, text=True, timeout=600,
+        env={**os.environ, "PYTHONPATH": ROOT},
+    )
+    assert p.returncode == 0, p.stderr[-2000:]
+    assert p.stdout.strip().splitlines()[-1] == "None"
